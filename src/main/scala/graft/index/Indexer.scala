@@ -1059,8 +1059,8 @@ object Indexer {
       // measured at p50 in bench_serving.json's single-query face) for a
       // sync that is almost always a no-op. Both sides of the comparison
       // are bounded driver metadata (≤ nBuckets names each).
-      val onDisk = observedBuckets(spark, s"$path/$table")
-        .map(b => s"term_bucket=$b").toSet
+      val onDisk = observedBuckets(spark, s"$path/$table").keySet
+        .map(b => s"term_bucket=$b")
       val inCatalog = cat.listPartitionNames(ident).toSet
       if (onDisk != inCatalog)
         spark.sql(s"MSCK REPAIR TABLE `$name` SYNC PARTITIONS")
@@ -1155,17 +1155,17 @@ object Indexer {
     swapTable(spark, path, table)
   }
 
-  /** `term_bucket=` partition values physically present under a bucketed
-    * table — one driver-side directory listing (bounded metadata: ≤
-    * nBuckets entries). */
+  /** `term_bucket=` partition directories physically present under a
+    * bucketed table, by partition value — one driver-side directory
+    * listing (bounded metadata: ≤ nBuckets entries). */
   private def observedBuckets(spark: org.apache.spark.sql.SparkSession,
-                              tablePath: String): Seq[Long] = {
+                              tablePath: String): Map[Long, org.apache.hadoop.fs.Path] = {
     val p = new org.apache.hadoop.fs.Path(tablePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("term_bucket="))
-      .map(_.stripPrefix("term_bucket=").toLong)
+    if (!fs.exists(p)) Map.empty
+    else fs.listStatus(p).iterator.map(_.getPath)
+      .filter(_.getName.startsWith("term_bucket="))
+      .map(d => d.getName.stripPrefix("term_bucket=").toLong -> d).toMap
   }
 
   /** The bucket count to PRUNE a store read with, or None for "read the
@@ -1178,9 +1178,13 @@ object Indexer {
     * reader degrades to a full-table read (correct, slower) instead. */
   def pruningBuckets(spark: org.apache.spark.sql.SparkSession, path: String,
                      table: String, recorded: Option[Int],
-                     fallback: Int): Option[Int] = {
-    val nb = recorded.getOrElse(fallback)
-    val bad = observedBuckets(spark, s"$path/$table").filter(_ >= nb)
+                     fallback: Int): Option[Int] =
+    validBuckets(path, table, recorded.getOrElse(fallback),
+      observedBuckets(spark, s"$path/$table").keys)
+
+  private def validBuckets(path: String, table: String, nb: Int,
+                           observed: Iterable[Long]): Option[Int] = {
+    val bad = observed.filter(_ >= nb)
     if (bad.isEmpty) Some(nb)
     else {
       System.err.println(s"[graft] $path/$table: recorded bucket count $nb is " +
@@ -1188,6 +1192,35 @@ object Indexer {
         "reading UNPRUNED; rewrite the layout markers to restore pruning " +
         "(see Indexer.storedPositionalBuckets)")
       None
+    }
+  }
+
+  /** Open a term-bucketed table (`postings` or `positional`) for ONE
+    * query's buckets — the store access path of every search face, the
+    * analog of the reference's Cassandra partition-key lookup. ONE
+    * listing of the table root validates the recorded bucket count (as
+    * [[pruningBuckets]]) and yields the existing `term_bucket=` dirs;
+    * only those among `bucketsOf(nb)` are read (the IN-list filter stays
+    * on the read as a PartitionFilter), so no query lists the whole table.
+    * None: no dir of the query's buckets exists, nothing can match. A
+    * stale record degrades to the full unpruned read; a doc-bucketed
+    * table keeps its catalog route. No cache: every call lists afresh,
+    * so appends and deletes are always visible. */
+  def openTermBuckets(spark: org.apache.spark.sql.SparkSession, path: String,
+                      table: String, fallback: Int)
+                     (bucketsOf: Int => Seq[Long]): Option[DataFrame] = {
+    val dirs = observedBuckets(spark, s"$path/$table")
+    val recorded =
+      if (table == "positional") storedPositionalBuckets(spark, path)
+      else storedBuckets(spark, path)
+    validBuckets(path, table, recorded.getOrElse(fallback), dirs.keys) match {
+      // an absent or empty table reads (or fails) exactly as unpruned
+      case Some(nb) if dirs.nonEmpty =>
+        val buckets = bucketsOf(nb).distinct
+        val hit = buckets.flatMap(dirs.get)
+        if (hit.isEmpty) None
+        else Some(storeTable(spark, path, table, hit).filter(col("term_bucket").isin(buckets: _*)))
+      case _ => Some(storeTable(spark, path, table))
     }
   }
 
@@ -1596,20 +1629,14 @@ object Indexer {
     * plans exchange-free; everything else is identical. */
   def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): InvertedIndex = {
     graft.FsOps.requireNotHusk(spark, path) // consumed shard: pointed refusal
-    val (ds, po) = docBucketsOf(spark, path) match {
-      case Some(db) =>
-        (bucketedStoreTable(spark, path, "doc_stats", db, partitioned = false),
-         bucketedStoreTable(spark, path, "postings", db, partitioned = true))
-      case None =>
-        (spark.read.parquet(s"$path/doc_stats"),
-         spark.read.parquet(s"$path/postings"))
-    }
-    InvertedIndex(
-      docStats = ds,
-      postings = po,
+    withDerived(spark, path, storeTable(spark, path, "doc_stats"), storeTable(spark, path, "postings"))
+  }
+
+  private def withDerived(spark: org.apache.spark.sql.SparkSession, path: String,
+                          docStats: DataFrame, postings: DataFrame): InvertedIndex =
+    InvertedIndex(docStats, postings,
       vocab = spark.read.parquet(derivedTablePath(spark, path, "vocab")),
       meta = spark.read.parquet(derivedTablePath(spark, path, "meta")))
-  }
 
   /** The positional table of a store, routed like [[readIndex]]'s big
     * tables: a doc-bucketed positional table ([[writePositional]] with
@@ -1620,11 +1647,26 @@ object Indexer {
     * side. */
   def readPositional(spark: org.apache.spark.sql.SparkSession,
                      path: String): DataFrame =
-    positionalDocBucketsOf(spark, path) match {
-      case Some(db) => bucketedStoreTable(spark, path, "positional", db,
-        partitioned = true)
-      case None => spark.read.parquet(s"$path/positional")
+    storeTable(spark, path, "positional")
+
+  /** One big store table (`doc_stats`, `postings`, `positional`): through
+    * the catalog when its doc-bucket marker is set, else a plain parquet
+    * read — of only the given `term_bucket=` dirs when `dirs` is non-empty
+    * (`basePath` keeps `term_bucket` a partition column). */
+  private def storeTable(spark: org.apache.spark.sql.SparkSession, path: String,
+                         table: String,
+                         dirs: Seq[org.apache.hadoop.fs.Path] = Nil): DataFrame = {
+    val docBuckets =
+      if (table == "positional") positionalDocBucketsOf(spark, path)
+      else docBucketsOf(spark, path)
+    docBuckets match {
+      case Some(db) =>
+        bucketedStoreTable(spark, path, table, db, partitioned = table != "doc_stats")
+      case None if dirs.nonEmpty =>
+        spark.read.option("basePath", s"$path/$table").parquet(dirs.map(_.toString): _*)
+      case None => spark.read.parquet(s"$path/$table")
     }
+  }
 
   /** LIVE view of a store: [[readIndex]] minus tombstoned documents
     * ([[deleteDocs]]). Without a `deletes` table this IS readIndex —
@@ -1637,5 +1679,21 @@ object Indexer {
     ix.copy(
       docStats = minusDeletes(spark, path, ix.docStats),
       postings = minusDeletes(spark, path, ix.postings))
+  }
+
+  /** The live view ([[readIndexLive]]) for ONE query: doc_stats, vocab
+    * and meta open exactly as [[readIndex]] opens them, postings through
+    * [[openTermBuckets]] — only the query's bucket directories are
+    * listed and read. Left(live doc_stats) when none of them exists: the
+    * query matches nothing. */
+  def readIndexLiveFor(spark: org.apache.spark.sql.SparkSession, path: String,
+                       fallback: Int)
+                      (bucketsOf: Int => Seq[Long]): Either[DataFrame, InvertedIndex] = {
+    graft.FsOps.requireNotHusk(spark, path) // consumed shard: pointed refusal
+    val docStats = minusDeletes(spark, path, storeTable(spark, path, "doc_stats"))
+    openTermBuckets(spark, path, "postings", fallback)(bucketsOf) match {
+      case None => Left(docStats)
+      case Some(po) => Right(withDerived(spark, path, docStats, minusDeletes(spark, path, po)))
+    }
   }
 }

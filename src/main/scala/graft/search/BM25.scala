@@ -18,16 +18,20 @@ import graft.index.Indexer.InvertedIndex
   *   score   = Σ_terms idf * norm_tf
   * }}}
   *
-  * Scale design: postings are pre-filtered to the query's terms (an
-  * `In`-list predicate pushed into the parquet scan — row-group and
-  * dictionary pruning; with the bucketed index store, partition pruning
-  * too). `vocab` restricted to k query terms is ≤ k rows → broadcast hash
-  * join. `meta` is one row → broadcast cross join, never a collect. The
-  * only big join is postings ⋈ doc_stats on `doc_id` — sort-merge at
-  * scale, BHJ when AQE sees the filtered postings are small. The final
-  * top-k plans as `TakeOrderedAndProject` (per-partition heaps, driver
-  * merges k rows — the same algorithm as the reference's `takeOrdered`,
-  * `query.py:92`, but on codegen'd rows).
+  * Scale design: a persisted store is opened per query through
+  * [[graft.index.Indexer.openTermBuckets]] — ONE listing of the postings
+  * root, then a read of only the query's existing `term_bucket=`
+  * directories (≤ |terms| of the store's partitions; no whole-table
+  * partition discovery), with the `term_bucket` IN-list kept as a
+  * partition filter and the `term` In-list pushed into the parquet scan
+  * (row-group and dictionary pruning). `vocab` restricted to k query
+  * terms is ≤ k rows → broadcast hash join. `meta` is one row →
+  * broadcast cross join, never a collect. The only big join is
+  * postings ⋈ doc_stats on `doc_id` — sort-merge at scale, BHJ when AQE
+  * sees the filtered postings are small. The final top-k plans as
+  * `TakeOrderedAndProject` (per-partition heaps, driver merges k rows —
+  * the same algorithm as the reference's `takeOrdered`, `query.py:92`,
+  * but on codegen'd rows).
   */
 object BM25 {
 
@@ -53,36 +57,29 @@ object BM25 {
     */
   def search(ix: InvertedIndex, queryText: String, params: Params = Params()): DataFrame = {
     val terms = Analyzer.analyzeQuery(queryText).distinct
-    if (terms.isEmpty) return emptyResult(ix)
+    if (terms.isEmpty) return emptyResult(ix.docStats)
     searchTerms(ix, terms, params)
   }
 
   /** Query a *persisted* index store ([[graft.index.Indexer.writeIndex]]):
-    * adds a `term_bucket` IN-literal computed on the driver with the
-    * store's bucket function, so the parquet reader statically prunes to
-    * ≤ |terms| of the store's partitions before any IO — the Spark-native
-    * analog of the reference's Cassandra partition-key lookup.
+    * the query's term buckets, computed on the driver with the store's
+    * recorded bucket function, pick the ONLY postings directories the
+    * store-open lists and reads ([[graft.index.Indexer.readIndexLiveFor]])
+    * — the Spark-native analog of the reference's Cassandra partition-key
+    * lookup. Live view: tombstoned docs never return. A store whose
+    * layout record fails validation (a legacy co-located store with a
+    * clobbered root marker) degrades to the unpruned, correct read.
     */
   def searchStore(spark: org.apache.spark.sql.SparkSession, path: String,
                   queryText: String, params: Params = Params(),
                   nBuckets: Int = 64): DataFrame = {
-    // live view: a store with soft-deletes must never return dead docs;
-    // without tombstones this is a plain readIndex (no extra IO)
-    val ix = graft.index.Indexer.readIndexLive(spark, path)
     val terms = Analyzer.analyzeQuery(queryText).distinct
-    if (terms.isEmpty) return emptyResult(ix)
-    // the store's recorded bucket count wins over the parameter — but only
-    // after validation against the physical partition layout (a legacy
-    // co-located store may carry a clobbered root marker; mis-pruning
-    // would silently drop the query's postings, so degrade to unpruned)
-    val pruned = graft.index.Indexer.pruningBuckets(spark, path, "postings",
-        graft.index.Indexer.storedBuckets(spark, path), nBuckets) match {
-      case Some(nb) =>
-        val buckets = terms.map(graft.index.Indexer.termBucketOf(_, nb)).distinct
-        ix.postings.filter(col("term_bucket").isin(buckets: _*))
-      case None => ix.postings
+    graft.index.Indexer.readIndexLiveFor(spark, path, nBuckets)(nb =>
+        terms.map(graft.index.Indexer.termBucketOf(_, nb))) match {
+      case Right(ix) if terms.nonEmpty => searchTerms(ix, terms, params)
+      case Right(ix) => emptyResult(ix.docStats)
+      case Left(docStats) => emptyResult(docStats)
     }
-    searchTerms(ix.copy(postings = pruned), terms, params)
   }
 
   /** Batch query serving: rank EVERY query in a query frame
@@ -112,56 +109,43 @@ object BM25 {
 
   /** [[searchMany]] against a PERSISTED index store
     * ([[graft.index.Indexer.writeIndex]]): the batch-serving analog of
-    * [[searchStore]]'s static partition pruning. A query FRAME has no
-    * driver literal to push — but the bucket DOMAIN is ≤ nBuckets, so
-    * one tiny aggregate over the log (distinct `term_bucket` under the
-    * store's recorded bucket function) collects a ≤ nBuckets-value
-    * IN-list: bounded driver METADATA even for a million-query log,
-    * never a data-path collect. The postings scan then statically
-    * prunes to the union of the log's buckets (plan-asserted in
-    * PlanSpec; Spark's dynamic partition pruning was measured NOT to
-    * fire here — the query side carries no selective predicate, so the
-    * planner's heuristic skips insertion). Tombstoned docs excluded via
-    * the live view; a store with an invalidated layout record degrades
-    * to the unpruned (correct) read, same as [[searchStore]]. */
+    * [[searchStore]]'s store-open. A query FRAME has no driver literal —
+    * but the bucket DOMAIN is ≤ nBuckets, so one tiny aggregate over the
+    * log (distinct `term_bucket` under the store's recorded bucket
+    * function) collects a ≤ nBuckets-value bucket union: bounded driver
+    * METADATA even for a million-query log, never a data-path collect.
+    * Only that union's postings directories are then listed and read
+    * ([[graft.index.Indexer.readIndexLiveFor]]), the IN-list kept as a
+    * partition filter (plan-asserted in PlanSpec; Spark's dynamic
+    * partition pruning was measured NOT to fire here — the query side
+    * carries no selective predicate, so the planner's heuristic skips
+    * insertion). Tombstoned docs excluded via the live view; a store with
+    * an invalidated layout record degrades to the unpruned (correct)
+    * read, same as [[searchStore]]. */
   def searchManyStore(spark: org.apache.spark.sql.SparkSession, path: String,
                       queries: DataFrame, params: Params = Params(),
                       idCol: String = "query_id", textCol: String = "query_text",
                       nBuckets: Int = 64): DataFrame = {
-    val ix = graft.index.Indexer.readIndexLive(spark, path)
     val qt = queryTerms(queries, idCol, textCol)
-    val (pruned, qtUsed) = graft.index.Indexer.pruningBuckets(spark, path,
-        "postings", graft.index.Indexer.storedBuckets(spark, path),
-        nBuckets) match {
-      case Some(nb) =>
-        // the analyzed (query_id, term) frame feeds TWO consumers — the
-        // bucket-union collect and the scoring join — so it is
-        // materialized ONCE (eager localCheckpoint: analyzer runs a
-        // single time over the log, pairs land on executor block
-        // storage ∝ log size). Not just a CPU saving: a
-        // NONDETERMINISTIC query frame (sample, un-ordered limit,
-        // rand-derived ids) re-evaluated per consumer could yield a
-        // bucket union inconsistent with the join's terms, silently
-        // pruning away matching postings — one materialization makes
-        // both consumers see the same rows by construction.
-        // Costs, by design (same trade as Dedup.spanClean): the
-        // checkpointed (query_id, term) pairs pin executor block storage
-        // ∝ log size until the ContextCleaner reclaims the frame after
-        // the caller's reference drops — a long-running serving session
-        // issuing many logs accumulates blocks between GCs; and the
-        // frame is NON-RECOMPUTABLE (checkpointing truncates lineage),
-        // so an executor lost after this point fails the query instead
-        // of silently recomputing — which for a nondeterministic log
-        // could resurrect the very inconsistency this guards against.
-        // Loud failure over silent wrong answers.
-        val qtOnce = qt.localCheckpoint(true)
-        val buckets = qtOnce
-          .select(graft.index.Indexer.termBucket(col("term"), nb).as("b"))
-          .distinct().collect().map(_.getLong(0)).toSeq
-        (ix.postings.filter(col("term_bucket").isin(buckets: _*)), qtOnce)
-      case None => (ix.postings, qt) // single consumer: no double-read
+    // on the pruned path the analyzed (query_id, term) frame feeds TWO
+    // consumers — the bucket-union collect and the scoring join — so it
+    // is materialized ONCE (eager localCheckpoint). Beyond the CPU saving,
+    // a NONDETERMINISTIC log (sample, rand-derived ids) re-evaluated per
+    // consumer could yield a bucket union inconsistent with the join's
+    // terms and silently prune away matches. Costs, by design (same trade
+    // as Dedup.spanClean): the pairs pin executor block storage ∝ log
+    // size until the ContextCleaner reclaims them, and the frame is
+    // NON-RECOMPUTABLE — a lost executor fails the query loudly instead
+    // of recomputing a possibly-inconsistent log.
+    var qtUsed = qt // an unpruned (stale-layout) read has one consumer: no double-read
+    graft.index.Indexer.readIndexLiveFor(spark, path, nBuckets) { nb =>
+      qtUsed = qt.localCheckpoint(true)
+      qtUsed.select(graft.index.Indexer.termBucket(col("term"), nb).as("b"))
+        .distinct().collect().map(_.getLong(0)).toSeq
+    } match {
+      case Right(ix) => searchManyOn(ix, qtUsed, params)
+      case Left(docStats) => emptyResult(docStats, Some(qtUsed))
     }
-    searchManyOn(ix.copy(postings = pruned), qtUsed, params)
   }
 
   /** Per-query distinct terms; array_distinct BEFORE explode so a
@@ -243,13 +227,15 @@ object BM25 {
       withRank.select(col("rank"), col("doc_id"), col("score"))
   }
 
-  private def emptyResult(ix: InvertedIndex): DataFrame = {
-    val base = ix.docStats.sparkSession.emptyDataFrame
-    val cols =
-      if (ix.docStats.columns.contains("title"))
-        Seq(lit(0).as("rank"), lit(0L).as("doc_id"), lit("").as("title"), lit(0.0).as("score"))
-      else
-        Seq(lit(0).as("rank"), lit(0L).as("doc_id"), lit(0.0).as("score"))
+  /** Zero rows in the face's result columns — the single-query shape,
+    * or the batch shape keyed by `log`'s query_id. */
+  private def emptyResult(docStats: DataFrame,
+                          log: Option[DataFrame] = None): DataFrame = {
+    val base = log.getOrElse(docStats.sparkSession.emptyDataFrame)
+    val title =
+      if (docStats.columns.contains("title")) Seq(lit("").as("title")) else Nil
+    val cols = log.map(_ => col("query_id")).toSeq ++
+      Seq(lit(0).as("rank"), lit(0L).as("doc_id")) ++ title :+ lit(0.0).as("score")
     base.select(cols: _*).limit(0)
   }
 }

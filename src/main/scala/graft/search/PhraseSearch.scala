@@ -69,19 +69,20 @@ object PhraseSearch {
   }
 
   /** Phrase search against a PERSISTED positional store
-    * ([[Indexer.writePositional]]): the phrase's term buckets become a
-    * driver-computed IN-literal, so the parquet reader statically prunes
-    * to ≤ |distinct terms| of the store's partitions before any IO —
-    * the same access-path story as [[BM25.searchStore]], now for
-    * positions. Like that reader, this is a LIVE view: a store carrying
-    * soft-delete tombstones ([[Indexer.deleteDocs]] on a co-located
-    * index) never returns dead docs — the anti-join applies after the
-    * pruned scan, so pruning is unaffected. */
+    * ([[Indexer.writePositional]]): the phrase's term buckets, computed
+    * on the driver, pick the only ≤ |distinct terms| partition
+    * directories the store-open lists and reads — the same access path
+    * as [[BM25.searchStore]], now for positions. Like that reader, this
+    * is a LIVE view: a store carrying soft-delete tombstones
+    * ([[Indexer.deleteDocs]] on a co-located index) never returns dead
+    * docs — the anti-join applies after the pruned scan, so pruning is
+    * unaffected. */
   def searchStore(spark: org.apache.spark.sql.SparkSession, path: String,
                   phrase: String, k: Int = 10, nBuckets: Int = 64): DataFrame = {
     val terms = Analyzer.analyzeQuery(phrase)
     require(terms.nonEmpty, s"phrase analyzed to zero terms: '$phrase'")
-    searchPostings(livePositional(spark, path, terms, nBuckets), phrase, k)
+    livePositional(spark, path, terms, nBuckets)
+      .fold(noMatches(spark.emptyDataFrame, "phrase_tf"))(searchPostings(_, phrase, k))
   }
 
   /** Batch phrase serving: rank EVERY phrase in a query frame
@@ -139,7 +140,7 @@ object PhraseSearch {
                       nBuckets: Int = 64): DataFrame = {
     val (pos, qt) = liveForLog(spark, path,
       phraseTerms(queries, idCol, textCol), nBuckets)
-    searchManyOn(pos, qt, k)
+    pos.fold(noMatches(qt, "phrase_tf"))(searchManyOn(_, qt, k))
   }
 
   /** Batch proximity serving: every query's sloppy-phrase match in one
@@ -186,7 +187,7 @@ object PhraseSearch {
                          nBuckets: Int = 64): DataFrame = {
     val (pos, qt) = liveForLog(spark, path,
       distinctTerms(queries, idCol, textCol), nBuckets)
-    proximityManyOn(pos, qt, window, k)
+    pos.fold(noMatches(qt, "prox_tf"))(proximityManyOn(_, qt, window, k))
   }
 
   /** Per-query ORDERED terms with their ordinal: `(query_id, n, ord,
@@ -209,10 +210,12 @@ object PhraseSearch {
       .select(col("query_id"), size(col("toks")).as("n"),
         posexplode(col("toks")).as(Seq("ord", "term")))
 
-  /** Store access path for a query LOG: bucket-union static pruning
-    * (≤ nBuckets distinct values collected from the exploded terms —
-    * bounded driver metadata at any log size) + the live-view
-    * tombstone anti-join. Returns the pruned positional table AND the
+  /** Store access path for a query LOG: the log's bucket union (≤
+    * nBuckets distinct values collected from the exploded terms —
+    * bounded driver metadata at any log size) picks the positional
+    * directories [[Indexer.openTermBuckets]] lists and reads, then the
+    * live-view tombstone anti-join. Returns the opened positional table
+    * (None: no directory of the union exists, nothing matches) AND the
     * term frame the caller must join with: on the pruned path the
     * analyzed frame is materialized ONCE (eager localCheckpoint) so the
     * bucket collect and the matching join see the SAME rows — a
@@ -226,19 +229,22 @@ object PhraseSearch {
     * rather than risking a silently-inconsistent recompute). */
   private def liveForLog(spark: org.apache.spark.sql.SparkSession,
                          path: String, qt: DataFrame,
-                         nBuckets: Int): (DataFrame, DataFrame) = {
-    val raw = Indexer.readPositional(spark, path)
-    val (pruned, qtUsed) = Indexer.pruningBuckets(spark, path, "positional",
-        Indexer.storedPositionalBuckets(spark, path), nBuckets) match {
-      case Some(nb) =>
-        val qtOnce = qt.localCheckpoint(true)
-        val buckets = qtOnce.select(Indexer.termBucket(col("term"), nb).as("b"))
-          .distinct().collect().map(_.getLong(0)).toSeq
-        (raw.filter(col("term_bucket").isin(buckets: _*)), qtOnce)
-      case None => (raw, qt) // single consumer: no double-read
+                         nBuckets: Int): (Option[DataFrame], DataFrame) = {
+    var qtUsed = qt // an unpruned (stale-layout) read has one consumer: no double-read
+    val pos = Indexer.openTermBuckets(spark, path, "positional", nBuckets) { nb =>
+      qtUsed = qt.localCheckpoint(true)
+      qtUsed.select(Indexer.termBucket(col("term"), nb).as("b"))
+        .distinct().collect().map(_.getLong(0)).toSeq
     }
-    (Indexer.minusDeletes(spark, path, pruned), qtUsed)
+    (pos.map(Indexer.minusDeletes(spark, path, _)), qtUsed)
   }
+
+  /** The ranked result of a query (or, keyed by `keys`' query_id, a log)
+    * none of whose term buckets exists in the store: zero rows. */
+  private def noMatches(keys: DataFrame, tfCol: String): DataFrame =
+    keys.select(keys.columns.filter(_ == "query_id").map(col).toSeq ++
+        Seq(lit(0L).as("rank"), lit(0L).as("doc_id"), lit(0L).as(tfCol)): _*)
+      .limit(0)
 
   /** Rank + bound each query's matches: top-`k` per query on the
     * bounded-heap operator, then a per-query rank window over the ≤ k
@@ -272,27 +278,23 @@ object PhraseSearch {
                      nBuckets: Int = 64): DataFrame = {
     val terms = Analyzer.analyzeQuery(query).distinct
     require(terms.nonEmpty, s"query analyzed to zero terms: '$query'")
-    proximityPostings(livePositional(spark, path, terms, nBuckets), query, window, k)
+    livePositional(spark, path, terms, nBuckets)
+      .fold(noMatches(spark.emptyDataFrame, "prox_tf"))(proximityPostings(_, query, window, k))
   }
 
-  /** The store readers' shared access path: bucket-pruned positional scan
-    * (the store's validated layout record builds the static IN-literal;
-    * an untrustworthy record — e.g. a legacy co-located store whose root
-    * marker was clobbered — degrades to an unpruned read instead of
-    * mis-pruning), then the tombstone anti-join for the live view. */
+  /** The store readers' shared access path: the positional table opened
+    * for the query's buckets only ([[Indexer.openTermBuckets]] — the
+    * store's validated layout record names the buckets; an untrustworthy
+    * record, e.g. a legacy co-located store whose root marker was
+    * clobbered, degrades to an unpruned read instead of mis-pruning),
+    * then the tombstone anti-join for the live view. None when no
+    * directory of the query's buckets exists. */
   private def livePositional(spark: org.apache.spark.sql.SparkSession,
                              path: String, terms: Seq[String],
-                             nBuckets: Int): DataFrame = {
-    val raw = Indexer.readPositional(spark, path)
-    val pruned = Indexer.pruningBuckets(spark, path, "positional",
-        Indexer.storedPositionalBuckets(spark, path), nBuckets) match {
-      case Some(nb) =>
-        val buckets = terms.distinct.map(Indexer.termBucketOf(_, nb)).distinct
-        raw.filter(col("term_bucket").isin(buckets: _*))
-      case None => raw
-    }
-    Indexer.minusDeletes(spark, path, pruned)
-  }
+                             nBuckets: Int): Option[DataFrame] =
+    Indexer.openTermBuckets(spark, path, "positional", nBuckets)(nb =>
+        terms.map(Indexer.termBucketOf(_, nb)))
+      .map(Indexer.minusDeletes(spark, path, _))
 
   private def proximityPostings(positional: DataFrame, query: String,
                                 window: Int, k: Int): DataFrame = {

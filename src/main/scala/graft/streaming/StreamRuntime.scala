@@ -44,22 +44,24 @@ object StreamRuntime {
       dir
     })
 
-  /** Run `body` with `spark.sql.shuffle.partitions` derived from the
-    * SOURCE VOLUME instead of the session core count (guide §2.5
-    * "synthetic partitioning keys", §2.2 "fewer, larger partitions"):
-    * a streaming query fixes its state-store partition count from this
-    * conf at first start, and AQE does NOT coalesce stateful stream
-    * shuffles — so a micro-batch over kilobytes of input was paying a
-    * core-count-wide state shuffle per trigger, which is why the
-    * streaming runtimes measured SLOWER at 32 cores than at 8
-    * (PERF_r19 scaling 0.33–0.51). One partition per ~32 MB of source,
-    * clamped to [1, session width]: tiny fixtures collapse to a few
-    * state partitions, large inputs keep the session's width. The conf
-    * is restored after the (single-owner, bounded AvailableNow) run.
-    * Results are unaffected — partition count never changes what a
-    * stateful aggregate computes, only how wide it shuffles. */
-  private def withVolumeShuffleWidth[T](spark: SparkSession, srcDir: String)
-                                       (body: => T): T = {
+  /** The session a stream over `srcDir` runs on, with
+    * `spark.sql.shuffle.partitions` derived from the SOURCE VOLUME
+    * instead of the session core count (guide §2.5 "synthetic
+    * partitioning keys", §2.2 "fewer, larger partitions"): a streaming
+    * query fixes its state-store partition count from this conf at first
+    * start, and AQE does NOT coalesce stateful stream shuffles — so a
+    * micro-batch over kilobytes of input was paying a core-count-wide
+    * state shuffle per trigger, which is why the streaming runtimes
+    * measured SLOWER at 32 cores than at 8 (PERF_r19 scaling
+    * 0.33–0.51). One partition per ~32 MB of source, clamped to
+    * [1, session width]: tiny fixtures collapse to a few state
+    * partitions, large inputs keep the session's width (and `spark`
+    * itself). The narrowed width lives on a private `newSession()`
+    * carrying the caller's modifiable SQL settings — never on the shared
+    * session, so a store build or query running beside the stream keeps
+    * its width. Results are unaffected — partition count never changes
+    * what a stateful aggregate computes, only how wide it shuffles. */
+  private def volumeSession(spark: SparkSession, srcDir: String): SparkSession = {
     val p = new org.apache.hadoop.fs.Path(srcDir)
     val bytes =
       try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -68,11 +70,14 @@ object StreamRuntime {
     val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val target = math.min(session.toLong,
       math.max(1L, bytes / (32L << 20) + 1L)).toInt
-    if (target >= session) body
+    if (target >= session) spark
     else {
-      spark.conf.set("spark.sql.shuffle.partitions", target)
-      try body
-      finally spark.conf.set("spark.sql.shuffle.partitions", session)
+      val narrow = spark.newSession()
+      spark.conf.getAll.foreach { case (k, v) =>
+        if (spark.conf.isModifiable(k)) narrow.conf.set(k, v)
+      }
+      narrow.conf.set("spark.sql.shuffle.partitions", target)
+      narrow
     }
   }
 
@@ -86,19 +91,17 @@ object StreamRuntime {
   def runCommits(spark: SparkSession, srcDir: String, storePath: String): Unit = {
     val scratch = graft.queries.QueryGroup.scratchDir("graft-cdc-run")
     val schema = spark.read.parquet(srcDir).schema
-    withVolumeShuffleWidth(spark, srcDir) {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: Dataset[Row], id: Long) =>
-          VersionedStore.commitAt(batch.sparkSession, storePath, batch, id + 1)
-        }
-        .option("checkpointLocation", s"$scratch/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    volumeSession(spark, srcDir).readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(srcDir)
+      .writeStream
+      .foreachBatch { (batch: Dataset[Row], id: Long) =>
+        VersionedStore.commitAt(batch.sparkSession, storePath, batch, id + 1)
+      }
+      .option("checkpointLocation", s"$scratch/ckpt")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
   }
 
   /** Run `transform` over a file-source stream of `srcDir` to completion
@@ -108,18 +111,16 @@ object StreamRuntime {
     val scratch = graft.queries.QueryGroup.scratchDir("graft-stream-run")
     val out = s"$scratch/result"
     val schema = spark.read.parquet(srcDir).schema
-    withVolumeShuffleWidth(spark, srcDir) {
-      val q = transform(spark.readStream.schema(schema).parquet(srcDir))
-        .writeStream
-        .outputMode("complete")
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          batch.write.mode("overwrite").parquet(out)
-        }
-        .option("checkpointLocation", s"$scratch/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    transform(volumeSession(spark, srcDir).readStream.schema(schema).parquet(srcDir))
+      .writeStream
+      .outputMode("complete")
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        batch.write.mode("overwrite").parquet(out)
+      }
+      .option("checkpointLocation", s"$scratch/ckpt")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
     spark.read.parquet(out)
   }
 
@@ -134,19 +135,17 @@ object StreamRuntime {
     val scratch = graft.queries.QueryGroup.scratchDir("graft-stream-append")
     val out = s"$scratch/result"
     val schema = spark.read.parquet(srcDir).schema
-    withVolumeShuffleWidth(spark, srcDir) {
-      val q = transform(spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir))
-        .writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", s"$scratch/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    transform(volumeSession(spark, srcDir).readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(srcDir))
+      .writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        batch.write.mode("append").parquet(out)
+      }
+      .option("checkpointLocation", s"$scratch/ckpt")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
     spark.read.parquet(out)
   }
 
@@ -358,20 +357,21 @@ object StreamRuntime {
       b
     }
     val schema = spark.read.parquet(srcDir).schema
-    withVolumeShuffleWidth(spark, srcDir) {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: Dataset[Row], id: Long) =>
-          indexIngestBatch(batch.sparkSession, storePath, batch.toDF(),
-            base + id, titleCol, nBuckets, docBuckets)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    volumeSession(spark, srcDir).readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(srcDir)
+      .writeStream
+      .foreachBatch { (batch: Dataset[Row], id: Long) =>
+        // the batch's own frames keep the stream's volume width; the
+        // store-side work (duplicate probe, the |vocab|-row derived merge)
+        // plans on the caller's session at its own width
+        indexIngestBatch(spark, storePath, batch.toDF(),
+          base + id, titleCol, nBuckets, docBuckets)
+      }
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
   }
 
   /** Stream a TAKEDOWN QUEUE into the cross-store forget cascade: a

@@ -413,4 +413,61 @@ class StreamingSpec extends SparkSpec {
     assert(out.length == 20, s"each key exactly once, got ${out.length}")
     assert(out.toSet === (1L to 20L).map(i => (i, s"v$i")).toSet)
   }
+
+  test("a volume-narrowed stream leaves a concurrent store build at session width") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import graft.index.Indexer
+    import graft.streaming.StreamRuntime
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(width > 1, "the spec session must be wider than a narrowed stream")
+    val src = graft.queries.QueryGroup.scratchDir("graft-narrow-spec") + "/src"
+    // one tiny file: the stream narrows to one partition, and its single
+    // scan task is the only core the gate below holds
+    (1L to 30L).toDF("id").coalesce(1).write.parquet(src)
+    NarrowStreamGate.reset()
+    val gate = udf { (id: Long) => NarrowStreamGate.hold(); id }
+    val stream = Future(StreamRuntime.runAvailableNow(spark, src,
+      _.select((gate(col("id")) % 3).as("k")).groupBy("k").count()))(
+      scala.concurrent.ExecutionContext.global)
+    try {
+      assert(NarrowStreamGate.entered.await(120, java.util.concurrent.TimeUnit.SECONDS),
+        "the stream never reached its micro-batch")
+      // the stream is mid-batch on its narrowed session; a build planned now
+      assert(spark.conf.get("spark.sql.shuffle.partitions").toInt === width)
+      val docs = Seq((1L, "fast hash join"), (2L, "slow hash scan"), (3L, "join scan"))
+        .toDF("doc_id", "text")
+      val vocab = Indexer.buildIndex(docs).vocab
+      assert(vocab.collect().length === 5)
+      val widths = new AdaptiveSparkPlanHelper {}.collect(vocab.queryExecution.executedPlan) {
+        case s: ShuffleExchangeLike => s.numPartitions
+      }
+      assert(widths.nonEmpty && widths.forall(_ == width),
+        s"build shuffled at $widths while a narrowed stream ran, session width $width")
+    } finally NarrowStreamGate.release.countDown()
+    val counts = Await.result(stream, 180.seconds).as[(Long, Long)].collect().toMap
+    assert(counts === Map(0L -> 10L, 1L -> 10L, 2L -> 10L))
+    assert(NarrowStreamGate.streamWidth.get === "1", "the stream itself must run narrowed")
+  }
+}
+
+/** Same-JVM (local mode) gate holding a stream's micro-batch open while
+  * the spec plans work on the shared session. */
+object NarrowStreamGate {
+  @volatile var entered = new java.util.concurrent.CountDownLatch(1)
+  @volatile var release = new java.util.concurrent.CountDownLatch(1)
+  val streamWidth = new java.util.concurrent.atomic.AtomicReference[String]("")
+  def reset(): Unit = {
+    entered = new java.util.concurrent.CountDownLatch(1)
+    release = new java.util.concurrent.CountDownLatch(1)
+    streamWidth.set("")
+  }
+  def hold(): Unit = {
+    streamWidth.set(org.apache.spark.sql.internal.SQLConf.get
+      .getConfString("spark.sql.shuffle.partitions"))
+    entered.countDown()
+    release.await(120, java.util.concurrent.TimeUnit.SECONDS)
+  }
 }
